@@ -25,9 +25,13 @@ Local smoke:
 
 Scale posture: each stage is an independently plan-audited operator
 (BENCH/PLANS.md) — the MinHash path collapses exact duplicates before
-banding and never cross-joins; CC is O(diameter) rounds of
+banding and never cross-joins; CC scans the pair plan once, seeds
+round 1 from the edge list and then runs O(diameter) rounds of
 hash-partitioned join+min; the cap is one window shuffle on the
-source key. The composition adds NO new shuffle beyond its stages.
+source key. The composition adds NO new shuffle beyond its stages,
+and computes each intermediate once: the post-dedup (quality-scored)
+frame is persisted for the job's lifetime, both stage counts come from
+one aggregate over it, and the write reads it too.
 """
 
 from __future__ import annotations
@@ -78,13 +82,20 @@ def main(argv: list[str] | None = None) -> int:
         dedup_clusters(pairs, docs).filter("is_survivor").select("doc_id")
     )
     kept = docs.join(surv, "doc_id")
-    n_after_dedup = kept.count()
-
+    if not args.no_quality:
+        kept = add_quality(kept)
+    # one persisted post-dedup frame serves the counts and the write:
+    # neither the survivor join nor the quality scoring runs twice
+    cached = kept.persist()
     if args.no_quality:
-        n_after_quality = n_after_dedup
+        n_after_dedup = n_after_quality = cached.count()
     else:
-        kept = add_quality(kept).filter("quality_keep")
-        n_after_quality = kept.count()
+        counts = cached.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.count(F.when(F.col("quality_keep"), 1)).alias("q"),
+        ).first()
+        n_after_dedup, n_after_quality = counts["n"], counts["q"]
+        kept = cached.filter("quality_keep")
 
     if args.per_source_cap is not None:
         if "n_tokens" not in kept.columns:
@@ -102,6 +113,7 @@ def main(argv: list[str] | None = None) -> int:
         )
 
     kept.write.mode("overwrite").parquet(args.output)
+    cached.unpersist()
     n_output = spark.read.parquet(args.output).count()
 
     report = {

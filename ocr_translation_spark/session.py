@@ -15,6 +15,10 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 ARROW_MAX_RECORDS = 512  # media bytes are KB-scale here, MB-scale in prod
+# orderBy().limit(k) plans as TakeOrderedAndProject, whose per-task top-k
+# buffer is sized from k: a "no limit" k such as 10**9 takes the driver
+# heap. Above this k Spark plans a full sort + limit instead.
+TOPK_SORT_FALLBACK = 100_000
 
 
 def get_spark(
@@ -38,6 +42,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config(
             "spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_MAX_RECORDS)
+        )
+        .config(
+            "spark.sql.execution.topKSortFallbackThreshold",
+            str(TOPK_SORT_FALLBACK),
         )
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))

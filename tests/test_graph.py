@@ -38,9 +38,48 @@ def test_cc_components_and_singletons(spark):
 def test_cc_unconverged_raises_not_silent(spark):
     """A chain longer than max_iters must ERROR, never return wrong
     labels silently."""
-    chain = [(i, i + 1) for i in range(1, 9)]
+    chain = _edges(spark, [(i, i + 1) for i in range(1, 9)])
     with pytest.raises(RuntimeError, match="not converged"):
-        connected_components(_edges(spark, chain), max_iters=2)
+        connected_components(chain, max_iters=2)
+    # max_iters counts label rounds, round 1 included: the 9-node path
+    # needs 8 rounds to carry label 1 to node 9 and a 9th to see nothing
+    # change
+    with pytest.raises(RuntimeError, match="not converged after 8 rounds"):
+        connected_components(chain, max_iters=8)
+    got = connected_components(chain, max_iters=9).collect()
+    assert {r["node"]: r["cluster_id"] for r in got} == {
+        n: 1 for n in range(1, 10)
+    }
+
+
+def test_cc_empty_edges_every_node_singleton(spark):
+    """No edges: the loop converges in round 1 on an empty edge set and
+    every supplied node comes back as its own cluster."""
+    nodes = spark.range(1, 6).select(F.col("id").alias("_id"))
+    cc = connected_components(_edges(spark, []), nodes=nodes)
+    assert sorted(map(tuple, cc.collect())) == [(n, n) for n in range(1, 6)]
+
+
+def test_cc_reads_edge_plan_once(spark):
+    """A lazy edge plan (here a Python UDF that counts the rows it
+    sees) is evaluated once per edge row over the whole CC loop — not
+    once per edge direction, and not once per round."""
+    from pyspark.sql.types import LongType
+
+    seen = spark.sparkContext.accumulator(0)
+
+    def tap(x):
+        seen.add(1)
+        return x
+
+    rows = [(1, 2), (2, 3), (3, 4), (4, 5), (7, 8)]
+    edges = _edges(spark, rows).select(
+        F.udf(tap, LongType())("id_a").alias("id_a"), "id_b"
+    )
+    cc = connected_components(edges)
+    got = {r["node"]: r["cluster_id"] for r in cc.collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 7: 7, 8: 7}
+    assert seen.value == len(rows)
 
 
 def test_dedup_clusters_survivorship(spark):

@@ -405,39 +405,101 @@ def test_py_ws_class_matches_python_isspace(spark):
         assert r["m"] == r["c"].isspace(), hex(ord(r["c"]))
 
 
-def test_run_curation_cli(spark, tmp_path):
-    """spark-submit-shaped CLI smoke for the curation job: drop
-    accounting is conserved and the output is duplicate-free."""
-    import json as _json
+def _curation_corpus():
+    """(doc_id, text, source) rows with planted near-dup groups and junk.
 
+    Every doc draws its words from its own letter-only vocabulary, so
+    docs only near-dup within a planted group (one token dropped or
+    swapped: shingle Jaccard > 0.9). Groups {1,2,3} and {10,11} have
+    clean text; group {40,41} is junk (mean token length 16), as are
+    30 (3 tokens) and 31 (punctuation soup); 20-23 are clean
+    singletons. Token counts set the per-source cap order."""
+
+    def words(doc, n, width=5):
+        out = []
+        for i in range(n):
+            k = doc * 1000 + i
+            w = ""
+            while len(w) < width:
+                w += chr(97 + k % 26)
+                k //= 26
+            out.append(w)
+        return out
+
+    a = words(1, 40)
+    b = words(10, 30)
+    c = words(40, 35, width=16)
+    return [
+        (1, " ".join(a), "s0"),
+        (2, " ".join(a[:-1]), "s0"),
+        (3, " ".join(a[:-1] + words(3, 1)), "s0"),
+        (10, " ".join(b), "s1"),
+        (11, " ".join(b[:-1]), "s1"),
+        (20, " ".join(words(20, 35)), "s0"),
+        (21, " ".join(words(21, 25)), "s0"),
+        (22, " ".join(words(22, 15)), "s0"),
+        (23, " ".join(words(23, 20)), "s1"),
+        (30, " ".join(words(30, 3)), "s0"),
+        (31, " ".join(w[:2] + "?!;:" for w in words(31, 10)), "s1"),
+        (40, " ".join(c), "s1"),
+        (41, " ".join(c[:-1]), "s1"),
+    ]
+
+
+def test_run_curation_cli(spark, tmp_path):
+    """spark-submit-shaped CLI on a planted corpus: every report field
+    is exact on the default and the --no-quality path, the output is
+    exactly the expected survivors, and the job leaves no persisted
+    RDD behind."""
     from jobs.run_curation import main
 
-    docs = spark.createDataFrame(
-        [
-            (i, "common words here to share " + ("alpha beta gamma delta "
-             * 6 if i % 4 else "alpha beta gamma delta " * 6), "s%d" % (i % 2))
-            for i in range(24)
-        ],
-        "doc_id long, text string, source string",
-    )
-    inp = str(tmp_path / "docs")
-    docs.write.parquet(inp)
-    out = str(tmp_path / "curated")
-    rep = str(tmp_path / "report")
-    assert main([
-        "--input", inp, "--output", out, "--report", rep,
-        "--per-source-cap", "5",
-    ]) == 0
-    kept = spark.read.parquet(out)
-    n_out = kept.count()
-    assert 0 < n_out <= 10  # 2 sources x cap 5
-    r = spark.read.parquet(rep).collect()[0].asDict()
-    # conservation: every drop is accounted for
-    assert r["n_input"] == 24
-    assert (
-        r["n_input"] - r["n_dropped_neardup"] - r["n_dropped_quality"]
-        - r["n_dropped_source_cap"] == r["n_output"] == n_out
-    )
-    # per-source cap honored
-    per_src = kept.groupBy("source").count().collect()
-    assert all(row["count"] <= 5 for row in per_src)
+    spark.createDataFrame(
+        _curation_corpus(), "doc_id long, text string, source string"
+    ).write.parquet(str(tmp_path / "docs"))
+
+    def run(name, *flags):
+        out, rep = str(tmp_path / name), str(tmp_path / (name + "_rep"))
+        assert main([
+            "--input", str(tmp_path / "docs"), "--output", out,
+            "--report", rep, "--per-source-cap", "2", *flags,
+        ]) == 0
+        ids = {r["doc_id"] for r in spark.read.parquet(out).collect()}
+        return spark.read.parquet(rep).collect()[0].asDict(), ids
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    # survivors 1, 10, 20-23, 30, 31, 40; quality drops 30, 31, 40;
+    # cap 2 keeps s0's 1 (40 tokens) and 20 (35), s1's 10 and 23
+    report, ids = run("curated")
+    assert report == {
+        "n_input": 13,
+        "n_after_neardup_cc": 9,
+        "n_dropped_neardup": 4,
+        "n_after_quality": 6,
+        "n_dropped_quality": 3,
+        "n_output": 4,
+        "n_dropped_source_cap": 2,
+    }
+    assert ids == {1, 10, 20, 23}
+
+    # the first call built the (session-scoped, by design) memoized
+    # near-dup pairs and clusters; a repeat on the same input reuses
+    # them, so whatever else it persisted must be released on return
+    before = persisted()
+    # junk survives: s1's cap now keeps 40 (35 tokens) over 23 (20)
+    report, ids = run("curated_nq", "--no-quality")
+    assert report == {
+        "n_input": 13,
+        "n_after_neardup_cc": 9,
+        "n_dropped_neardup": 4,
+        "n_after_quality": 9,
+        "n_dropped_quality": 0,
+        "n_output": 4,
+        "n_dropped_source_cap": 5,
+    }
+    assert ids == {1, 10, 20, 40}
+    assert persisted() <= before
+    before = persisted()
+    assert run("curated_again")[1] == {1, 10, 20, 23}
+    assert persisted() <= before
